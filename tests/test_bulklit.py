@@ -16,6 +16,7 @@ import struct
 from pyspark.sql import functions as F
 
 from yelp_data_engineering_pipeline_spark.functions.bulklit import (
+    lit_array_node,
     lit_double_array,
     lit_double_matrix,
     lit_long_array,
@@ -99,3 +100,23 @@ def test_same_plan_as_element_wise(spark):
         return re.sub(r"#\d+", "#x", df._jdf.queryExecution().optimizedPlan().toString())
 
     assert norm(bulk) == norm(ref)
+
+
+def test_array_node_is_one_bit_exact_literal(spark):
+    """lit_array_node copies IEEE bits across py4j (no decimal parse),
+    so every tricky double — NaN, ±inf, -0.0, subnormals — must come
+    back bit for bit, bigints past 2^53 exactly, and the ANALYZED plan
+    must hold ONE literal node, not a CreateArray of per-value ones."""
+    longs = [0, -1, 2**62, -(2**62), 9_007_199_254_740_993]
+    df = spark.range(1).select(
+        lit_array_node(TRICKY_DOUBLES).alias("d"),
+        lit_array_node(longs, "bigint").alias("l"),
+        lit_array_node([]).alias("d0"),
+    )
+    row = df.first()
+    assert [_bits(v) for v in row.d] == [_bits(v) for v in TRICKY_DOUBLES]
+    assert row.l == longs and row.d0 == []
+    t = dict(df.dtypes)
+    assert t["d"] == t["d0"] == "array<double>" and t["l"] == "array<bigint>"
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "array(" not in analyzed, analyzed

@@ -1175,40 +1175,246 @@ def test_multiprobe_sql_twin_matches_column_form(spark, sf_dir):
     )
 
 
-def test_ivf_kernel_sql_twin_matches_column_form(spark, sf_dir):
-    """ivf_assign's literal-codebook kernel is ONE parsed, memoized
-    expression (r14, guide §7.3); the ivf_assign_cell/ivf_probe_cells
-    Column builders stay the equivalence oracle: canonical optimized
-    plans AND rows must match for both the assign and the probe form."""
+def _cosine_reference(a, b):
+    """similarity.cosine as the pre-hoist code called it: three folds."""
+    def sq_norm(v):
+        return F.aggregate(
+            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
+
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x)
+    return dot / (F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b)))
+
+
+def _cell_structs_reference(vec, cents):
+    """The IVF kernel as it stood before the per-row/per-codebook norm
+    hoist, kept verbatim as the bit-identity oracle: a CreateArray
+    codebook matrix, and every cell re-folds the row's norm AND the
+    centroid's norm beside the dot product (three folds per cell)."""
+    from yelp_data_engineering_pipeline_spark.functions.bulklit import (
+        lit_double_matrix,
+        lit_long_array,
+    )
+
+    cosine = _cosine_reference
+    keys = sorted(cents)
+    mat = lit_double_matrix([[float(x) for x in cents[c]] for c in keys])
+    ids = lit_long_array([int(c) for c in keys])
+    return F.transform(
+        F.sequence(F.lit(1), F.lit(len(keys))),
+        lambda i: F.struct(
+            (-F.round(cosine(vec, F.element_at(mat, i)), 4))
+            .alias("neg_sim"),
+            F.element_at(ids, i).cast("long").alias("cell"),
+        ),
+    )
+
+
+def _cells_reference(vec, cents, nprobe):
+    structs = _cell_structs_reference(vec, cents)
+    if nprobe is None:
+        return F.array_min(structs)["cell"]
+    return F.transform(
+        F.slice(F.array_sort(structs), 1, max(1, nprobe)), lambda s: s["cell"]
+    )
+
+
+def _search_reference(ix, queries, k, nprobe):
+    """IvfIndex.search (float store, no prune/where/rerank) as it stood
+    before the hoist: probe through the reference kernel, verify every
+    candidate pair with the full three-fold cosine."""
+    from pyspark.sql import Window
+
+    cosine = _cosine_reference
+    cents = ix._cents_from_meta(ix.meta())
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+    q = q.select(
+        *q.columns,
+        F.explode(_cells_reference(F.col("q_emb"), cents, nprobe)).alias("cell"),
+    )
+    c = ix.assign.read().select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
+        "cell",
+    )
+    pairs = (
+        q.join(c, "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 4).alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return pairs.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rk") <= k
+    )
+
+
+def _bits(v):
+    """Doubles by their exact IEEE bits (-0.0 and NaN stay visible)."""
+    import struct
+
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
+def _bit_rows(df):
+    return sorted(tuple(_bits(v) for v in r) for r in df.collect())
+
+
+def test_ivf_kernel_bit_identical_to_prefold_form(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """The hoisted IVF kernel (one codebook literal, centroid norms
+    folded on the driver, the row norm once per row, one dot fold per
+    cell) and the hoisted search verify (one fold per candidate pair)
+    keep every IEEE operation in order, so they must reproduce the
+    pre-hoist formulation above BIT FOR BIT: assign and probe at
+    nprobe 1/2/4 over both codebook transports, the raw neg_sim
+    structs, and IvfIndex.search rows including cos_sim bits. The
+    fixture embeddings are unit vectors, so rows are rescaled by 1-5×:
+    a norm taken from the wrong side would otherwise cancel out."""
+    import yelp_data_engineering_pipeline_spark.operators.similarity as S
+    from yelp_data_engineering_pipeline_spark.operators.ann_index import IvfIndex
+    from yelp_data_engineering_pipeline_spark.operators.upsert import (
+        ParquetMergeTable,
+    )
+    from yelp_data_engineering_pipeline_spark.tables import load
+
+    scale = (F.col("vec_id") % 5 + 1).cast("double")
+    base = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x * scale).alias("embedding"))
+    cents = {
+        int(r["vec_id"]): list(r["embedding"])
+        for r in base.orderBy("vec_id").limit(16).collect()
+    }
+    vec = F.col("embedding")
+    structs_new = base.select("vec_id", S._literal_cells(vec, cents).alias("s"))
+    structs_ref = base.select("vec_id", _cell_structs_reference(vec, cents).alias("s"))
+    enc = lambda df: sorted(  # noqa: E731
+        (r.vec_id, [(_bits(s.neg_sim), s.cell) for s in r.s])
+        for r in df.collect()
+    )
+    assert enc(structs_new) == enc(structs_ref)
+
+    for bound in (S._CODEBOOK_LITERAL_MAX_VALUES, 0):  # literal, broadcast
+        monkeypatch.setattr(S, "_CODEBOOK_LITERAL_MAX_VALUES", bound)
+        for nprobe in (None, 1, 2, 4):
+            ref = base.select("vec_id", _cells_reference(vec, cents, nprobe).alias("cell"))
+            new = S.ivf_assign(base, cents, nprobe=nprobe).select("vec_id", "cell")
+            assert _bit_rows(new) == _bit_rows(ref), (bound, nprobe)
+    monkeypatch.undo()
+
+    corpus = ParquetMergeTable(spark, str(tmp_path / "corpus"), key="vec_id")
+    corpus.merge(base)
+    ix = IvfIndex(spark, str(tmp_path / "ix"))
+    ix.build(corpus, n_centroids=8)
+    queries = base.filter(F.col("vec_id") < 40)
+    for nprobe in (1, 2, 4):
+        got = ix.search(queries, k=5, nprobe=nprobe, prune_files=False)
+        want = _search_reference(ix, queries, 5, nprobe)
+        assert _bit_rows(got) == _bit_rows(want), nprobe
+        assert got.count() > 0
+
+
+def test_ivf_kernel_plan_one_codebook_literal_one_fold_per_pair(spark, sf_dir):
+    """Plan pin for the hoist. (1) The analyzed assign plan holds the
+    codebook values in exactly ONE literal node — the flattened
+    array<double> — and nowhere else (the pre-hoist form inlined k·d
+    literal nodes, twice per cell's norm). (2) The search verify
+    projection has exactly one zip_with per candidate pair and no
+    sqrt: both norms arrive as precomputed columns."""
+    import re
+
+    from yelp_data_engineering_pipeline_spark.operators import ann_index as AI
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        _ivf_kernel_expr,
         ivf_assign_cell,
-        ivf_probe_cells,
+        similarity_topk_ivf,
     )
     from yelp_data_engineering_pipeline_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
     cents = {
-        int(r["vec_id"]): list(r["embedding"])
-        for r in emb.orderBy("vec_id").limit(4).collect()
+        int(r["vec_id"]): [float(x) for x in r["embedding"]]
+        for r in emb.orderBy("vec_id").limit(8).collect()
     }
-    base = emb.select("vec_id", "embedding")
+    jdbl = spark._jvm.java.lang.Double.toString
+    flat = [jdbl(x) for c in sorted(cents) for x in cents[c]]
+    lit_text = "[" + ",".join(flat) + "]"
+
+    def codebook_literals(col):
+        plan = (emb.select(col.alias("cell"))
+                ._jdf.queryExecution().analyzed().toString())
+        n = plan.count(lit_text)
+        rest = plan.replace(lit_text, "")
+        stray = [v for v in flat
+                 if re.search(r"(?<![\w.\-])" + re.escape(v) + r"(?![\w.])", rest)]
+        return n, stray
+
+    assert codebook_literals(ivf_assign_cell(F.col("embedding"), cents)) == (1, [])
+    n_ref, stray_ref = codebook_literals(
+        _cells_reference(F.col("embedding"), cents, None))
+    assert n_ref == 0 and stray_ref  # the pin distinguishes the old form
+
+    ix = AI._demo_index(spark, sf_dir)
+    q = emb.filter(F.col("vec_id") < 10)
+    for df in (ix.search(q, k=5, nprobe=2), similarity_topk_ivf(spark, sf_dir)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        verify = [ln for ln in plan.splitlines() if " AS cos_sim#" in ln]
+        assert len(verify) == 1, plan
+        assert verify[0].count("zip_with(") == 1, verify[0]
+        assert "SQRT(" not in verify[0], verify[0]
+
+
+def test_ivf_kernel_vector_column_named_emb_cb(spark, sf_dir):
+    """ADVICE r14: the removed SQL-text kernel substituted the codebook
+    into a ``_cb`` placeholder by string replace, so a vector column
+    whose NAME contained ``_cb`` was mangled. Assign and probe over a
+    column named ``emb_cb`` must give the same cells as over
+    ``embedding``."""
+    from yelp_data_engineering_pipeline_spark.operators.similarity import (
+        ivf_assign,
+    )
+    from yelp_data_engineering_pipeline_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = {
+        int(r["vec_id"]): list(r["embedding"])
+        for r in emb.orderBy("vec_id").limit(6).collect()
+    }
+    renamed = emb.withColumnRenamed("embedding", "emb_cb")
     for nprobe in (None, 2):
-        col_expr = (
-            ivf_assign_cell(F.col("embedding"), cents)
-            if nprobe is None
-            else ivf_probe_cells(F.col("embedding"), cents, nprobe)
-        )
-        ref = base.select("vec_id", col_expr.alias("cell"))
-        new = base.select(
-            "vec_id", _ivf_kernel_expr("embedding", cents, nprobe).alias("cell")
-        )
-        po = ref._jdf.queryExecution().optimizedPlan().canonicalized().toString()
-        pn = new._jdf.queryExecution().optimizedPlan().canonicalized().toString()
-        assert po == pn, f"nprobe={nprobe}: canonical plans diverge"
-        rr = [(r["vec_id"], r["cell"]) for r in ref.collect()]
-        rn = [(r["vec_id"], r["cell"]) for r in new.collect()]
-        assert sorted(rr) == sorted(rn)
+        want = ivf_assign(emb, cents, nprobe=nprobe).select("vec_id", "cell")
+        got = ivf_assign(renamed, cents, vec_col="emb_cb",
+                         nprobe=nprobe).select("vec_id", "cell")
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect()))
+
+
+def test_ivf_kernel_memo_is_bounded(spark):
+    """ADVICE r14: the kernel memo is keyed on codebook CONTENT, so a
+    serving loop that refreshes centroids would keep one entry per
+    version forever. Building many distinct codebooks must keep it at
+    or below its bound, and a repeated codebook must still hit."""
+    import yelp_data_engineering_pipeline_spark.operators.similarity as S
+
+    memo = S._kernel_memo
+    bound = memo.cache_info().maxsize
+    df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    memo.cache_clear()
+    for n in range(3 * bound):
+        cents = {0: [1.0, float(n)], 1: [float(n), 1.0]}
+        S.ivf_assign(df, cents)
+        assert memo.cache_info().currsize <= bound
+    assert memo.cache_info().currsize == bound
+    hits = memo.cache_info().hits
+    assert S._ivf_kernel_expr("embedding", cents, None) is S._ivf_kernel_expr(
+        "embedding", cents, None)
+    assert memo.cache_info().hits == hits + 2
 
 
 def test_rank_histogram_grid_lazy_matches_eager(spark):

@@ -7,6 +7,11 @@ sorted by their full value tuple — STRICTER than a hash compare).
 
 Usage: python tools/check_oracle.py [--bare] [--first-n N] [sf_dir] [query_name ...]
 
+Every PASS line carries ``sha=`` — the first 16 hex digits of a SHA-256
+over the canonical (sorted, exact-bits) Spark rows — so two sweeps can
+be diffed entry by entry as a hash baseline (``grep ^PASS | cut -d' '
+-f2,5`` strips the timings).
+
 ``--bare`` builds a PLAIN SparkSession (no session-factory confs, JVM
 default timezone) to simulate the round driver's harness — catches
 anything that silently depends on get_spark's configuration.
@@ -16,6 +21,7 @@ checks only a prefix).
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 import time
@@ -56,6 +62,19 @@ def _canon(rows: list[dict]) -> list[tuple]:
     out = [tuple(_norm(r[c]) for c in cols) for r in rows]
     out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
     return out
+
+
+def _digest(canon: list[tuple]) -> str:
+    """Order-insensitive content hash of canonical rows; floats enter
+    by their exact IEEE bits (``float.hex``), never a rounded repr."""
+    def enc(v):
+        if isinstance(v, float):
+            return v.hex()
+        if isinstance(v, tuple):
+            return tuple(enc(x) for x in v)
+        return v
+    h = hashlib.sha256(repr([enc(t) for t in canon]).encode())
+    return h.hexdigest()[:16]
 
 
 def main() -> int:
@@ -144,7 +163,8 @@ def main() -> int:
                   f"{time.time()-t0:.1f}s)")
             n_vacuous += 1
         else:
-            print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({len(srows)} rows, sha={_digest(sc)}, "
+                  f"{time.time()-t0:.1f}s)")
         n_pass += 1
 
     vac = f", {n_vacuous} VACUOUS (0-row pass)" if n_vacuous else ""

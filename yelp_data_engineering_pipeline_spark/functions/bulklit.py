@@ -27,6 +27,7 @@ but the helper must not silently corrupt one.
 from __future__ import annotations
 
 import math
+import struct
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column
@@ -87,3 +88,23 @@ def lit_long_array(values: Iterable[int]) -> Column:
     if not vals:
         return F.array().cast("array<bigint>")
     return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
+
+
+def lit_array_node(values: Iterable, elem: str = "double") -> Column:
+    """``array<double>`` (or ``elem="bigint"``) as ONE Catalyst
+    ``Literal`` node, where the helpers above parse to a CreateArray of
+    one node per value that every analysis walks. The values cross
+    py4j as one packed byte string into a JVM primitive array that
+    ``functions.lit`` wraps — five calls whatever the length; bits are
+    copied, never parsed, so NaN payloads and -0.0 survive."""
+    from pyspark import SparkContext
+
+    fmt, view, prim, conv = (("d", "asDoubleBuffer", "double", float)
+                             if elem == "double" else
+                             ("q", "asLongBuffer", "long", int))
+    vals = [conv(v) for v in values]
+    sc = SparkContext._active_spark_context
+    arr = sc._gateway.new_array(getattr(sc._jvm, prim), len(vals))
+    buf = sc._jvm.java.nio.ByteBuffer.wrap(struct.pack(f">{len(vals)}{fmt}", *vals))
+    getattr(buf, view)().get(arr)
+    return Column(sc._jvm.org.apache.spark.sql.functions.lit(arr))

@@ -427,8 +427,12 @@ class IvfIndex:
         union of its ``nprobe`` nearest cells (bounded k-row window
         per query), candidates come from one equi-join on ``cell``
         against the assignment table, verify is exact cosine on the
-        candidates only. Output schema matches ``topk_ivf``
-        (query_id, neighbor_id, cos_sim, rk).
+        candidates only. Probing runs the literal-codebook kernel
+        (similarity._scored_cells); each query's and each candidate's
+        norm is folded once per row before the join, so a candidate
+        pair costs one dot-product fold (similarity.verify_cosine),
+        bit-identical to ``round(cosine(q, c), 4)``. Output schema
+        matches ``topk_ivf`` (query_id, neighbor_id, cos_sim, rk).
 
         ``prune_files``: the probed-cell union (bounded by the
         codebook size — driver-scale by construction) routes the
@@ -466,12 +470,13 @@ class IvfIndex:
         with extra I/O (skip it there)."""
         from pyspark.sql import Window
 
-        from .similarity import ivf_assign
+        from .similarity import ivf_assign, row_norm, verify_cosine
 
         cents = self._cents_from_meta(self.meta())
         q = ivf_assign(
             queries.select(F.col(self.id_col).alias("query_id"),
-                           F.col(self.vec_col).alias("q_emb")),
+                           F.col(self.vec_col).alias("q_emb"),
+                           row_norm(self.vec_col).alias("q_norm")),
             cents, vec_col="q_emb", nprobe=max(1, nprobe),
             explode=True,
         )
@@ -494,27 +499,22 @@ class IvfIndex:
                 F.expr(where) if isinstance(where, str) else where)
         c = base.select(
             F.col(self.id_col).alias("neighbor_id"),
-            self._stored_vec().alias("c_emb"), "cell")
-        from .similarity import _cosine_spark_sql
-
+            self._stored_vec().alias("c_emb"), "cell",
+        ).withColumn("c_norm", row_norm("c_emb"))
         pairs = (q.join(c, "cell")
                  .filter(F.col("query_id") != F.col("neighbor_id"))
-                 .select("query_id", "q_emb", "neighbor_id",
-                         # single-parse exact-cosine verify (r14 —
-                         # same tree as the Column form, the
-                         # topk_lsh_multitable precedent)
-                         F.expr(f"round({_cosine_spark_sql('q_emb', 'c_emb')}, 4)")
-                         .alias("cos_sim")))
+                 .select("query_id", "q_emb", "q_norm", "neighbor_id",
+                         verify_cosine().alias("cos_sim")))
         w = Window.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), F.col("neighbor_id"))
         if rerank is None:
-            return (pairs.drop("q_emb").withColumn(
+            return (pairs.drop("q_emb", "q_norm").withColumn(
                 "rk", F.row_number().over(w).cast("bigint"))
                 .filter(F.col("rk") <= k))
         kk = max(k, k * max(1, rerank_factor))
         cand = (pairs.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= kk)
-                .select("query_id", "q_emb", "neighbor_id"))
+                .select("query_id", "q_emb", "q_norm", "neighbor_id"))
         # bounded by |queries|·k' (the search contract's small side):
         # the id list routes the corpus read through read_point — zone
         # maps + any Bloom index prune to the files holding candidates
@@ -522,11 +522,11 @@ class IvfIndex:
                cand.select("neighbor_id").distinct().collect()]
         raw = rerank.read_point(self.id_col, ids).select(
             F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).alias("raw_emb"))
+            F.col(self.vec_col).alias("raw_emb"),
+            row_norm(self.vec_col).alias("raw_norm"))
         exact = (cand.join(raw, "neighbor_id")
                  .select("query_id", "neighbor_id",
-                         F.round(cosine(F.col("q_emb"),
-                                        F.col("raw_emb")), 4)
+                         verify_cosine(b="raw_emb", nb="raw_norm")
                          .alias("cos_sim")))
         return (exact.withColumn(
             "rk", F.row_number().over(w).cast("bigint"))

@@ -27,11 +27,16 @@ in double precision — no Python UDF, no collect.
 
 from __future__ import annotations
 
+import functools
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cache import tracked_persist
-from ..functions.bulklit import lit_double_array, lit_double_matrix, lit_long_array
+from ..functions.bulklit import (
+    lit_array_node, lit_double_array, lit_double_matrix, lit_long_array,
+)
 from ..partitioning import widen_for_compute
 from ..tables import load
 from ..plans.catalog import register
@@ -187,6 +192,19 @@ def _rph_bucket_spark_sql(vec_name: str, planes: list[list[float]]) -> str:
     )
 
 
+def _norm_sql(v: str) -> str:
+    """``sqrt(sq_norm(v))`` as Spark SQL TEXT over a raw fragment."""
+    return (f"sqrt(aggregate({v}, 0.0D, "
+            f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))")
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """:func:`dot` as Spark SQL TEXT over two raw fragments."""
+    return (f"aggregate(zip_with({a}, {b}, "
+            f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            f"0.0D, (acc, x) -> acc + x)")
+
+
 def _cosine_sql_frag(a: str, b: str) -> str:
     """:func:`cosine` as Spark SQL TEXT over two raw SQL FRAGMENTS
     (column references must arrive pre-quoted; fragments may be array
@@ -195,18 +213,7 @@ def _cosine_sql_frag(a: str, b: str) -> str:
     product with double casts, 0.0 init, left-fold ``+`` aggregates,
     sqrt norms), so values are bit-identical (pinned by
     tests/test_plans.py)."""
-    def _sq(v: str) -> str:
-        return (
-            f"aggregate({v}, 0.0D, "
-            f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-        )
-
-    dot_ = (
-        f"aggregate(zip_with({a}, {b}, "
-        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, x) -> acc + x)"
-    )
-    return f"({dot_} / (sqrt({_sq(a)}) * sqrt({_sq(b)})))"
+    return f"({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
 def _cosine_spark_sql(a: str, b: str) -> str:
@@ -351,34 +358,76 @@ def topk_lsh_multitable(
     return pairs.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(F.col("rk") <= k)
 
 
-def _cell_structs(vec: Column, cents: dict[int, list[float]]) -> Column:
-    """``array<struct(-round(cosine(vec, centroid_c), 4), c)>`` over
-    the whole codebook, as a transform over a LITERAL matrix. Struct
-    ordering on (neg_sim, cell) == the IVF tiebreak (cent_sim DESC,
-    cell ASC).
+def row_norm(col: str) -> Column:
+    """The norm of column ``col`` (one parse), folded once per ROW."""
+    return F.expr(_norm_sql(f"`{col}`"))
 
-    The literal form costs one expression node per codebook VALUE
-    (PySpark's ``lit`` unrolls nested lists into array() constructors),
-    so Catalyst analysis grows with k·d — fine for the catalog/test
-    regime (≤16 cells × 64 dims), measurably slow past ~2k values and
-    ~30 s at k=1024·d=64. :func:`ivf_assign` therefore routes LARGE
-    codebooks through the one-row-broadcast data plane
-    (:func:`_scored_cells_over`) instead; this literal kernel stays
-    the join-free small-codebook path the plan-audit tests pin."""
+
+def verify_cosine(a: str = "q_emb", b: str = "c_emb",
+                  na: str = "q_norm", nb: str = "c_norm") -> Column:
+    """Per-pair ``round(cosine(a, b), 4)`` over :func:`row_norm` columns
+    computed before the candidate join: one fold per pair in
+    :func:`cosine`'s IEEE order, so bit-identical scores."""
+    return F.expr(f"round({_dot_sql(f'`{a}`', f'`{b}`')} / (`{na}` * `{nb}`), 4)")
+
+
+def _codebook(cents: dict[int, list[float]]):
+    """(sorted cell ids, row-major flattened values, centroid norms, d)
+    — folded ONCE on the driver. Each norm is :func:`sq_norm`'s IEEE
+    sequence (``acc + x*x`` from 0.0, correctly rounded sqrt), so it
+    is bit-identical to the same fold run JVM-side."""
+    if not cents:
+        raise ValueError("empty codebook")
     keys = sorted(cents)
-    # one parsed expression per literal (bulklit, r13): the per-value
-    # F.lit form cost ~1 s of driver time at 16 cells × 64 dims on
-    # every search/assign plan construction
-    mat = lit_double_matrix([[float(x) for x in cents[c]] for c in keys])
-    ids = lit_long_array([int(c) for c in keys])
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(len(keys))),
+    rows = [[float(x) for x in cents[c]] for c in keys]
+    d = len(rows[0])
+    if any(len(r) != d for r in rows):
+        raise ValueError("centroids differ in dimension")
+    norms = [math.sqrt(functools.reduce(lambda acc, x: acc + x * x, r, 0.0))
+             for r in rows]
+    return keys, [x for r in rows for x in r], norms, d
+
+
+def _scored_cells(vec: Column, flat: Column, cnorms: Column,
+                  ids: Column, k: int, d: int) -> Column:
+    """THE IVF kernel: ``array<struct(-round(cosine(vec, centroid_i),
+    4) AS neg_sim, cell)>`` over a k×d codebook given as its row-major
+    ``flat`` array<double> (cell i is the d-slice at (i-1)·d+1), the
+    driver-folded centroid norms and the cell ids — literal nodes
+    (:func:`_literal_cells`) or the one-row broadcast's columns
+    (:func:`ivf_assign`). Struct ordering on (neg_sim, cell) == the IVF
+    tiebreak (cent_sim DESC, cell ASC).
+
+    No value is computed twice: the row norm once per row (a
+    one-element transform is SQL's only let-binding), the centroid
+    norms once per codebook, so a cell costs ONE zip_with + aggregate
+    dot. :func:`cosine`'s IEEE order is kept, so cells are
+    bit-identical to the form that re-folded both norms per cell
+    (tests/test_plans.py::test_ivf_kernel_bit_identical_to_prefold_form)."""
+    return F.transform(F.array(F.sqrt(sq_norm(vec))), lambda vn: F.transform(
+        F.sequence(F.lit(1), F.lit(k)),
         lambda i: F.struct(
-            (-F.round(cosine(vec, F.element_at(mat, i)), 4))
-            .alias("neg_sim"),
-            F.element_at(ids, i).cast("long").alias("cell"),
-        ),
-    )
+            (-F.round(dot(vec, F.slice(flat, (i - 1) * d + 1, d))
+                      / (vn * F.element_at(cnorms, i)), 4)).alias("neg_sim"),
+            F.element_at(ids, i).alias("cell"),
+        )))[0]
+
+
+def _literal_cells(vec: Column, cents: dict[int, list[float]]) -> Column:
+    """:func:`_scored_cells` over the codebook as literal NODES
+    (bulklit.lit_array_node): the k·d values are ONE Catalyst literal,
+    so analysis does not grow with k·d."""
+    keys, flat, norms, d = _codebook(cents)
+    return _scored_cells(vec, lit_array_node(flat), lit_array_node(norms),
+                         lit_array_node(keys, "bigint"), len(keys), d)
+
+
+def _nearest(scored: Column, nprobe: int | None) -> Column:
+    """The nearest cell (nprobe None), else the nprobe nearest cells."""
+    if nprobe is None:
+        return F.array_min(scored)["cell"]
+    return F.transform(F.slice(F.array_sort(scored), 1, max(1, nprobe)),
+                       lambda s: s["cell"])
 
 
 def ivf_assign_cell(vec: Column, cents: dict[int, list[float]]) -> Column:
@@ -399,9 +448,7 @@ def ivf_assign_cell(vec: Column, cents: dict[int, list[float]]) -> Column:
     NaN sim (a zero-norm CENTROID) now ranks last instead of first —
     zero-norm vectors have no meaningful cosine cell either way, and
     no fixture or oracle exercises one."""
-    if not cents:
-        raise ValueError("empty codebook")
-    return F.array_min(_cell_structs(vec, cents))["cell"]
+    return _nearest(_literal_cells(vec, cents), None)
 
 
 def ivf_probe_cells(vec: Column, cents: dict[int, list[float]],
@@ -411,99 +458,40 @@ def ivf_probe_cells(vec: Column, cents: dict[int, list[float]],
     slice) — ordering/ties identical to ``ivf_assign_cell`` extended
     to rank n. O(k log k) per row vs the assign path's O(k), fine for
     the bounded QUERY side; the corpus hot path keeps the O(k) min."""
-    if not cents:
-        raise ValueError("empty codebook")
-    ranked = F.array_sort(_cell_structs(vec, cents))
-    return F.transform(
-        F.slice(ranked, 1, max(1, nprobe)), lambda s: s["cell"]
-    )
+    return _nearest(_literal_cells(vec, cents), nprobe)
 
 
 # Above this many codebook VALUES (k cells × d dims) the literal form
-# stops paying: a literal array-of-arrays is built from one expression
-# node per value, and Catalyst analysis grows with it — measured at
-# d=64: ~1 s of planning at k=32, ~4 s at k=128, ~30 s at k=1024 (and
-# whole-stage codegen gives up long before that). Past the bound the
-# codebook rides as DATA in a ONE-ROW broadcast instead: O(1) plan
-# size, the same map-side argmin, and (measured, k=1024 d=64) 3-5×
-# faster per corpus row than even the pre-r12 broadcast-expand +
-# window shape — while still shuffling nothing.
+# stops paying. The values are one literal node, so Catalyst's cost
+# does not grow with them; what does is the payload that node adds to
+# every serialized plan and task. Past the bound the codebook rides as
+# DATA in a ONE-ROW broadcast instead: shipped once per executor, the
+# same map-side kernel, still shuffling nothing.
 _CODEBOOK_LITERAL_MAX_VALUES = 2048
 
 
-def _cell_structs_sql(vec_frag: str, cents: dict[int, list[float]]) -> str:
-    """:func:`_cell_structs` as Spark SQL TEXT over a raw vector
-    FRAGMENT (r14, guide §7.3 — the minhash/semdedup single-parse
-    pattern): the whole scored-cells transform — codebook matrix
-    literal, id array, cosine fold, struct — renders as one string for
-    a single ``F.expr`` parse, instead of ~500 py4j round trips of
-    Column chatter per search/assign construction (measured ~0.3 s per
-    ``ivf_assign`` call at 8 cells × 64 dims). Same expression tree,
-    bit-identical values — pinned by
-    tests/test_plans.py::test_cell_structs_sql_twin_matches_column_form."""
-    from ..functions.bulklit import sql_double_matrix
-
-    keys = sorted(cents)
-    mat = sql_double_matrix([[float(x) for x in cents[c]] for c in keys])
-    ids = "array(" + ",".join(f"{int(c)}L" for c in keys) + ")"
-    cos = _cosine_sql_frag(vec_frag, "element_at(_cb, i)")
-    return (
-        f"transform(sequence(1, {len(keys)}), i -> struct("
-        f"-round({cos.replace('_cb', mat)}, 4) AS neg_sim, "
-        f"CAST(element_at({ids}, i) AS BIGINT) AS cell))"
-    )
-
-
-# Parsed probe/assign Columns keyed on (applicationId, vector column,
-# nprobe, codebook CONTENT) — an EXPRESSION memo like the LSH tag
-# memo above (unevaluated Catalyst trees, never results); serving
-# loops rebuild the identical kernel every search call otherwise.
-_CELL_EXPR_CACHE: dict = {}
+@functools.lru_cache(maxsize=8)
+def _kernel_memo(app_id, vec_col: str, nprobe: int | None, book: tuple) -> Column:
+    """Kernel Columns (unevaluated Catalyst trees holding the codebook
+    literal, never results) keyed on (applicationId, vector column,
+    nprobe, codebook CONTENT), so serving loops do not rebuild the
+    kernel per search. LRU-bounded: a refreshed or re-split codebook is
+    a new key, and a long-lived server must not keep every version."""
+    cents = dict(book)
+    vec = F.col(vec_col)
+    return (ivf_assign_cell(vec, cents) if nprobe is None
+            else ivf_probe_cells(vec, cents, nprobe))
 
 
 def _ivf_kernel_expr(vec_col: str, cents: dict[int, list[float]],
                      nprobe: int | None) -> Column:
-    """The literal-codebook assign (nprobe None) / probe-cells kernel
-    as ONE parsed, memoized expression."""
-    key = (
-        None,
-        vec_col,
-        nprobe,
-        tuple((int(c), tuple(float(x) for x in cents[c])) for c in sorted(cents)),
-    )
-    from pyspark.sql import SparkSession
-
+    """:func:`ivf_assign_cell` (nprobe None) / :func:`ivf_probe_cells`
+    over ``vec_col``, memoized."""
     sess = SparkSession.getActiveSession()
-    if sess is not None:
-        key = (sess.sparkContext.applicationId,) + key[1:]
-    cached = _CELL_EXPR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    structs = _cell_structs_sql(f"`{vec_col}`", cents)
-    if nprobe is None:
-        text = f"array_min({structs})['cell']"
-    else:
-        text = (
-            f"transform(slice(array_sort({structs}), 1, {max(1, nprobe)}), "
-            f"s -> s['cell'])"
-        )
-    parsed = F.expr(text)
-    _CELL_EXPR_CACHE[key] = parsed
-    return parsed
-
-
-def _scored_cells_over(vec: Column, mat: Column, ids: Column) -> Column:
-    """The codebook-as-data twin of :func:`_cell_structs`: score
-    ``vec`` against every row of the matrix COLUMN (one broadcast row
-    per partition, never per record). Identical arithmetic/tiebreak."""
-    return F.transform(
-        F.sequence(F.lit(1), F.size(mat)),
-        lambda i: F.struct(
-            (-F.round(cosine(vec, F.element_at(mat, i)), 4))
-            .alias("neg_sim"),
-            F.element_at(ids, i).cast("long").alias("cell"),
-        ),
-    )
+    return _kernel_memo(
+        sess.sparkContext.applicationId if sess is not None else None,
+        vec_col, nprobe,
+        tuple((int(c), tuple(float(x) for x in cents[c])) for c in sorted(cents)))
 
 
 def ivf_assign(df: DataFrame, cents: dict[int, list[float]],
@@ -512,17 +500,17 @@ def ivf_assign(df: DataFrame, cents: dict[int, list[float]],
                explode: bool = False) -> DataFrame:
     """``df`` plus the IVF cell column (or, with ``nprobe``, the
     probed-cells array) — the ONE assignment entry point that picks
-    the codebook transport by size:
+    the codebook transport by size; both run :func:`_scored_cells`:
 
     - small codebooks (k·d ≤ ``_CODEBOOK_LITERAL_MAX_VALUES``): the
-      literal kernels (:func:`ivf_assign_cell` /
-      :func:`ivf_probe_cells`) — join-free, constant-foldable, the
-      plan shape the audit tests pin for the catalog regime;
+      memoized literal kernels (:func:`ivf_assign_cell` /
+      :func:`ivf_probe_cells`) — join-free, the plan shape the audit
+      tests pin for the catalog regime;
     - large codebooks (the 100 TB regime, k≈2¹⁰): the codebook as a
-      ONE-ROW broadcast (matrix + id arrays) with the same transform
-      argmin over the matrix COLUMN. No row expansion, no shuffle —
-      the broadcast build side is a single row, not k rows, so this
-      is NOT the pre-r12 expand-and-window shape.
+      ONE-ROW broadcast (flattened values + norms + ids) with the same
+      kernel over its COLUMNS. No row expansion, no shuffle — the
+      broadcast build side is a single row, not k rows, so this is
+      NOT the pre-r12 expand-and-window shape.
 
     ``explode`` (with ``nprobe``): emit one ROW per probed cell,
     with the generator INSIDE this call's own projection. Callers
@@ -535,34 +523,21 @@ def ivf_assign(df: DataFrame, cents: dict[int, list[float]],
 
     Either way: zero shuffle of ``df``, bit-identical results
     (equivalence is test-pinned across the threshold)."""
-    if not cents:
-        raise ValueError("empty codebook")
-    keys = sorted(cents)
-    n_vals = sum(len(cents[c]) for c in keys)
-    vec = F.col(vec_col)
-    if n_vals <= _CODEBOOK_LITERAL_MAX_VALUES:
-        # single-parse + memoized kernel (r14): same tree as the
-        # ivf_probe_cells/ivf_assign_cell Column builders, which stay
-        # as the twin-test equivalence oracle
+    keys, flat, norms, d = _codebook(cents)
+    src = df
+    if len(flat) <= _CODEBOOK_LITERAL_MAX_VALUES:
         expr = _ivf_kernel_expr(vec_col, cents, nprobe)
-        if nprobe is not None and explode:
-            expr = F.explode(expr)
-        return df.select(*df.columns, expr.alias(cell_col))
-    onerow = df.sparkSession.createDataFrame(
-        [([[float(x) for x in cents[c]] for c in keys],
-          [int(c) for c in keys])],
-        "_cb_mat array<array<double>>, _cb_ids array<bigint>")
-    scored = _scored_cells_over(vec, F.col("_cb_mat"), F.col("_cb_ids"))
-    if nprobe is None:
-        expr = F.array_min(scored)["cell"]
     else:
-        expr = F.transform(
-            F.slice(F.array_sort(scored), 1, max(1, nprobe)),
-            lambda s: s["cell"])
-        if explode:
-            expr = F.explode(expr)
-    return (df.join(F.broadcast(onerow))
-            .select(*df.columns, expr.alias(cell_col)))
+        onerow = df.sparkSession.createDataFrame(
+            [(flat, norms, keys)],
+            "_cb_flat array<double>, _cb_norm array<double>, _cb_ids array<bigint>")
+        src = df.join(F.broadcast(onerow))
+        expr = _nearest(_scored_cells(
+            F.col(vec_col), F.col("_cb_flat"), F.col("_cb_norm"),
+            F.col("_cb_ids"), len(keys), d), nprobe)
+    if nprobe is not None and explode:
+        expr = F.explode(expr)
+    return src.select(*df.columns, expr.alias(cell_col))
 
 
 def topk_ivf(
@@ -601,23 +576,21 @@ def topk_ivf(
 
     q = ivf_assign(
         queries.select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb")),
+                       F.col("embedding").alias("q_emb"),
+                       row_norm("embedding").alias("q_norm")),
         cents, vec_col="q_emb", nprobe=max(1, nprobe), explode=True,
     )
     c = ivf_assign(
         widen_for_compute(corpus).select(
             F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb")),
+            F.col("embedding").alias("c_emb"),
+            row_norm("embedding").alias("c_norm")),
         cents, vec_col="c_emb",
     )
     pairs = (
         q.join(c, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 4).alias("cos_sim"),
-        )
+        .select("query_id", "neighbor_id", verify_cosine().alias("cos_sim"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return pairs.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(F.col("rk") <= k)

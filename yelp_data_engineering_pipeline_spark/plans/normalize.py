@@ -43,9 +43,9 @@ from ..schemas import HEALTH_SCORE_PATTERN, PRICE_PATTERN, WEEKDAY_ORDER
 # ~millions of rows, identical results — equivalence tested). The
 # business table keys on the scraped string id → two-phase range
 # scheme; the five child tables lead with the dense business_id
-# surrogate → the fixed-grid scheme (ONE eager count job per table
-# instead of sample+persist+count — r13, guide §1.2; ids identical,
-# goldens + oracle sweep pin it).
+# surrogate → the fixed-grid scheme (no sample+persist+count: its
+# offsets plan lazily, so it runs no eager job — guide §1.2; ids
+# identical, goldens + oracle sweep pin it).
 _dense_ids = dense_ids
 _child_dense_ids = dense_ids_grid_long
 
@@ -154,14 +154,14 @@ def normalize(results: DataFrame) -> dict[str, DataFrame]:
             oh, "business_id", "weekday_id", "open_time", "close_time"
         ).select("id", "business_id", "weekday_id", "open_time", "close_time")
 
-    # The five child tables each pay an EAGER per-cell count job at
-    # plan-construction time (dense_ids_grid_long — operators/ids.py;
-    # the rank window itself runs lazily in the caller's action). They
-    # are mutually independent once ``keyed`` exists, so their
-    # construction overlaps in a small pool (optimization guide §2.6);
-    # the shared ``keyed`` cache is filled once under Spark's block
-    # locks. Results are byte-identical to the sequential build
-    # (goldens pin them).
+    # The five child tables are mutually independent once ``keyed``
+    # exists, so their construction overlaps in a small pool (guide
+    # §2.6). It runs no Spark job (dense_ids_grid_long plans its offsets
+    # lazily), so the pool overlaps only py4j plan building. Each child
+    # action evaluates its input subtree twice (broadcast counts build
+    # and probe side) and relies on the shared ``keyed`` cache, filled
+    # once under Spark's block locks, to parse the raw input once.
+    # Results are byte-identical to the sequential build (goldens).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=5) as pool:
