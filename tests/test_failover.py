@@ -4,9 +4,10 @@ every sync boundary, and promote_replica() fences the old primary so
 a late writer cannot split-brain the pair.
 
 Invariants pinned:
-- fence() seals every commit path (merge / keyed DML / restore, any
-  handle) with TableFencedError while reads, time travel and the
-  change feed keep working; fencing twice is a no-op;
+- fence() seals every commit path (merge / every DML method, its
+  keyed no-ops included / restore, any handle) with TableFencedError
+  while reads, time travel and the change feed keep working; fencing
+  twice is a no-op;
 - content_fingerprint() is layout- and order-insensitive (equal row
   multisets ⇒ equal) and moves on any value/row change;
 - a write landing on the replica OUTSIDE the replication stream is
@@ -61,8 +62,22 @@ def test_fence_seals_table_reads_survive(spark, tmp_path):
     batch = spark.createDataFrame([(9, "a", 90)], SCHEMA)
     with pytest.raises(TableFencedError):
         t.merge(batch)
-    with pytest.raises(TableFencedError):
-        t.delete_keys("id", [1])
+    # all four DML methods, including the keyed no-ops (an empty probe
+    # list, a probe every file's zone map prunes): the fence guard runs
+    # before any of them could return without committing
+    dml = [
+        lambda: t.delete_where({"id": (1, 1)}),
+        lambda: t.update_where({"id": (1, 1)}, {"v": 0}),
+        lambda: t.delete_keys("id", [1]),
+        lambda: t.update_keys("id", [1], {"v": 0}),
+        lambda: t.delete_keys("id", []),
+        lambda: t.update_keys("id", [], {"v": 0}),
+        lambda: t.delete_keys("id", [10_000]),
+        lambda: t.update_keys("id", [10_000], {"v": 0}),
+    ]
+    for call in dml:
+        with pytest.raises(TableFencedError):
+            call()
     with pytest.raises(TableFencedError):
         t.restore(1)
     late = ParquetMergeTable(spark, str(tmp_path / "t"), key="id",

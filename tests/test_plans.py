@@ -1417,6 +1417,29 @@ def test_ivf_kernel_memo_is_bounded(spark):
     assert memo.cache_info().hits == hits + 2
 
 
+def test_lsh_tag_memo_is_bounded(spark):
+    """The multi-table LSH tag-array memo is keyed on plane CONTENT,
+    like the IVF kernel memo: a caller cycling through plane
+    configurations must keep it at or below its bound, and a repeated
+    configuration must still hit (no re-parse of the tag text)."""
+    import yelp_data_engineering_pipeline_spark.operators.similarity as S
+
+    memo = S._tag_expr_memo
+    bound = memo.cache_info().maxsize
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+                               "vec_id long, embedding array<double>")
+    memo.cache_clear()
+    for n in range(bound):      # two entries (query + corpus side) each
+        planes = [[[1.0, float(n)], [float(n), -1.0]]]
+        S.topk_lsh_multitable(df, df, 1, planes)
+        assert memo.cache_info().currsize <= bound
+    assert memo.cache_info().currsize == bound
+    hits = memo.cache_info().hits
+    S.topk_lsh_multitable(df, df, 1, planes)
+    assert memo.cache_info().hits == hits + 2
+    assert memo.cache_info().currsize == bound
+
+
 def test_rank_histogram_grid_lazy_matches_eager(spark):
     """rank_histogram_grid_lazy (no collect, no eager job — r14) must
     assign the SAME ranks and total as the eager grid scheme, including

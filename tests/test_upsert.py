@@ -1634,6 +1634,7 @@ def test_merge_table_deletion_vectors(spark, tmp_path):
     v = t.delete_where({"id": (100, 180)}, use_deletion_vectors=True)
     after = _snap_inodes(t.root, v)
     assert after == before                      # zero rewrite
+    assert t.history()[0]["operation"] == "delete_where_dv"
     assert t.read().count() == 919
     assert t.read().filter(F.col("id").between(100, 180)).count() == 0
     assert sum(len(p) for p in t.deletion_vectors().values()) == 81
@@ -2371,9 +2372,7 @@ def test_compact_bin_packs_by_target_size(spark, tmp_path):
     """compact(target_mb=) sizes the output from the manifest's
     per-file bytes (recorded at write time — no filesystem listing):
     a generous target collapses to one file, a tiny target fans out to
-    ceil(total/target) files, rows are byte-identical, and entries
-    without a bytes field (pre-r9 manifests) fall back to
-    target_files."""
+    ceil(total/target) files, and rows are byte-identical."""
     import math
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
@@ -2397,17 +2396,70 @@ def test_compact_bin_packs_by_target_size(spark, tmp_path):
     assert n2 == want >= 2
     assert t.read().count() == 50_000
 
-    # pre-r9 manifest entries (no bytes): falls back to target_files
-    man = dict(t._manifest(v2))
-    stripped = {k: {kk: vv for kk, vv in zm.items() if kk != "bytes"}
-                for k, zm in t._files(v2).items()}
-    man["files"] = stripped
-    man.pop("ckpt", None)
-    t._mcache[v2] = man
-    t._fcache.pop(v2, None)
-    v3 = t.compact(target_mb=0.001, target_files=2)
-    assert len(t._files(v3)) == 2                  # fallback honored
-    assert t.read().count() == 50_000
+
+def test_writers_record_what_readers_require(spark, tmp_path, monkeypatch):
+    """The readers take three writer invariants on trust (no reader
+    handles a layout that breaks them): every resolved manifest entry
+    carries an int ``bytes`` (compact's size bin-packing), no
+    checkpoint sidecar has an ``entry`` column (only the columnar
+    layout is decoded), and every finalized export marker records the
+    export-time ``schema`` (the feed-vs-head compatibility check).
+    Checked after a merge, each DML method in CoW and DV mode, compact
+    and restore — with every full record forced out to a sidecar, both
+    by a fresh write and by the columnar checkpoint carry."""
+    import functools
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(ParquetMergeTable, "_CKPT_INLINE_MAX", 3)
+    monkeypatch.setattr(ParquetMergeTable, "_CHECKPOINT_EVERY", 2)
+    root = str(tmp_path / "tbl")
+    t = ParquetMergeTable(spark, root, key="id", partition_by="p")
+    t.merge(spark.createDataFrame(
+        [(i, "abc"[i % 3], i) for i in range(60)],
+        "id long, p string, v long"))
+    dml = {
+        "delete_where": lambda b, dv: t.delete_where(
+            {"id": (b, b + 2)}, use_deletion_vectors=dv),
+        "delete_keys": lambda b, dv: t.delete_keys(
+            "id", [b + 3, b + 4], use_deletion_vectors=dv),
+        "update_where": lambda b, dv: t.update_where(
+            {"id": (b + 5, b + 6)}, {"v": -1}, use_deletion_vectors=dv),
+        "update_keys": lambda b, dv: t.update_keys(
+            "id", [b + 7], {"v": F.col("v") * 2}, use_deletion_vectors=dv),
+    }
+    steps = [("merge", None)] + [
+        (op + ("_dv" if dv else ""), functools.partial(f, 10 * dv, dv))
+        for dv in (False, True) for op, f in dml.items()
+    ]
+    steps += [("compact", lambda: t.compact(target_mb=0.001)),
+              ("restore(v=3)", lambda: t.restore(3))]
+    for op, call in steps:
+        if call is not None:
+            call()
+        v = t.current_version()
+        assert t.history()[0]["operation"] == op
+        fresh = ParquetMergeTable(spark, root, key="id", partition_by="p")
+        entries = fresh._files(v)
+        assert entries and all(
+            type(e.get("bytes")) is int and e["bytes"] > 0
+            for e in entries.values()), op
+    sidecars = glob.glob(os.path.join(root, "_log", "*.ckpt.*.parquet"))
+    assert len(sidecars) >= 4
+    for path in sidecars:
+        assert "entry" not in pq.read_schema(path).names, path
+    assert t.export_changes()
+    finalized = 0
+    for path in glob.glob(os.path.join(root, "_cdf", "_exported", "*.json")):
+        with open(path) as f:
+            rec = json.load(f)
+        if rec.get("files") is not None:
+            finalized += 1
+            assert "schema" in rec, path
+    assert finalized == len(steps)
 
 
 def test_maintenance_plan_reports_small_files(spark, tmp_path):
@@ -2699,12 +2751,13 @@ def test_bloom_index_survives_churn_without_rebuild(spark, tmp_path):
 
 def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path):
     """The coverage leg must report indexed∩live / live exactly, and
-    recommend a rebuild below the floor. auto_bloom=False restores the
-    r9 carry-only behavior, so churn visibly decays coverage."""
+    recommend a rebuild below the floor. Churn decays coverage when
+    the per-commit incremental build fails (advisory: _carry_bloom
+    carries the surviving bits and leaves the added files unindexed)."""
     from urllib.parse import unquote
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", auto_bloom=False)
+                          partition_by="p")
 
     def batch(ids):
         return spark.createDataFrame(
@@ -2715,16 +2768,21 @@ def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path):
     t.build_file_index("u")
     assert t.maintenance_plan()["bloom"]["u"]["coverage"] == 1.0
 
+    def failing_build(*args, **kwargs):
+        raise RuntimeError("incremental Bloom build failed")
+
+    t._bloom_build_entries = failing_build
     for b in range(8):     # churn partitions 0/1 only, no rebuild —
         # partitions 2/3 keep their carried entries
         t.merge(batch([800 + 4 * (10 * b + j) + b % 2 for j in range(10)]))
+    del t._bloom_build_entries
     v = t.current_version()
     live = set(t._file_keys(v))
     idx = t.file_index(v)["u"]
     want_cov = sum(1 for k in idx if unquote(k) in live) / len(live)
     plan = t.maintenance_plan()
     assert plan["bloom"]["u"]["coverage"] == round(want_cov, 4)
-    assert want_cov < 1.0             # carry-only really decayed
+    assert want_cov < 1.0             # churn really decayed
     if want_cov < t._BLOOM_COVERAGE_FLOOR:
         assert "build_file_index('u')" in plan["actions"]
     # unindexed files stay candidates: correctness holds under decay

@@ -261,9 +261,10 @@ def main() -> None:
     }
 
     # -- full-rewrite baseline LAST (it destroys the clustering) -------
-    # auto_bloom off for this op: the baseline engine being modeled has
-    # no index to maintain, so its cost must not ride the measurement
-    t.auto_bloom = False
+    # no Bloom maintenance for this op: the baseline engine being
+    # modeled has no index to maintain, so its cost must not ride the
+    # measurement
+    t._carry_bloom = lambda *args, **kwargs: None
     lo = dlo + (dhi - dlo) // 5
     hi = lo + width
     expect = t.read().filter(not_between(lo, hi)).count()

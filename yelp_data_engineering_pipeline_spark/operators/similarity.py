@@ -254,14 +254,25 @@ def topk_rph(
     return pairs.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(F.col("rk") <= k)
 
 
-# Parsed (tid, bucket) tag-array Columns, keyed on (applicationId, emb
-# column, plane matrix CONTENT). An EXPRESSION memo, not a result
-# cache: entries are unevaluated Catalyst trees — every query still
-# computes from its inputs. applicationId in the key drops entries
-# from previous sessions (a Column holds a JVM reference that dies
-# with its context). Bounded: one entry per distinct plane
-# configuration x column name (two in the whole repo).
-_TAG_EXPR_CACHE: dict = {}
+@functools.lru_cache(maxsize=8)
+def _tag_expr_memo(app_id, emb: str, plane_tables: tuple) -> Column:
+    """The parsed (tid, bucket) tag-array Column, keyed on
+    (applicationId, emb column, plane matrix CONTENT). An EXPRESSION
+    memo, not a result cache: entries are unevaluated Catalyst trees —
+    every query still computes from its inputs. applicationId in the
+    key retires entries from previous sessions (a Column holds a JVM
+    reference that dies with its context). LRU-bounded: a caller
+    cycling through plane configurations must not keep every one."""
+    return F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('tid', {i}, 'bucket', "
+            + _rph_bucket_spark_sql(emb, p)
+            + ")"
+            for i, p in enumerate(plane_tables)
+        )
+        + ")"
+    )
 
 
 def topk_lsh_multitable(
@@ -317,24 +328,11 @@ def topk_lsh_multitable(
         # the ~10 KB text re-parses in the JVM on every construction
         # otherwise (~0.1 s per table side), and bench/serving loops
         # rebuild this exact expression every call.
-        key = (
+        tagged = _tag_expr_memo(
             df.sparkSession.sparkContext.applicationId,
             emb,
             tuple(tuple(tuple(r) for r in p) for p in plane_tables),
         )
-        tagged = _TAG_EXPR_CACHE.get(key)
-        if tagged is None:
-            tagged = F.expr(
-                "array("
-                + ",".join(
-                    f"named_struct('tid', {i}, 'bucket', "
-                    + _rph_bucket_spark_sql(emb, p)
-                    + ")"
-                    for i, p in enumerate(plane_tables)
-                )
-                + ")"
-            )
-            _TAG_EXPR_CACHE[key] = tagged
         return df.select(id_col, F.col(emb), F.explode(tagged).alias("k")).select(
             id_col, F.col(emb), F.col("k.tid").alias("tid"), F.col("k.bucket").alias("bucket")
         )

@@ -477,7 +477,6 @@ class ParquetMergeTable:
                  partition_by: str | list[str] | tuple[str, ...] | None = None,
                  storage: str = "posix",
                  auto_compact_dv: float | None = None,
-                 auto_bloom: bool = True,
                  backend=None) -> None:
         import os
 
@@ -500,9 +499,6 @@ class ParquetMergeTable:
         # opt-in DV maintenance: after DV-writing DML, compact when
         # density crosses this (see maintenance_plan / BASELINE.md)
         self.auto_compact_dv = auto_compact_dv
-        # per-commit Bloom-index maintenance for ADDED files (VERDICT
-        # r9 next-2); False = carry-only (the r9 decay behavior)
-        self.auto_bloom = auto_bloom
         # one column or several (hive-nested dirs p1=a/p2=b — the
         # date+source layout real lakehouse tables use); internal code
         # works on the normalized tuple
@@ -822,8 +818,6 @@ class ParquetMergeTable:
                 return self._carry_checkpoint_spark(
                     new_v, man, gone, override)
             t = self._ckpt_table(man)
-            if "entry" in t.schema.names:        # legacy r9 layout
-                return None
             mask = pc.is_in(t.column("key"),
                             value_set=pa.array(list(carry_set),
                                                pa.string()))
@@ -914,8 +908,8 @@ class ParquetMergeTable:
     def _ckpt_table(self, man: dict, columns=None):
         """Read the checkpoint sidecar, optionally a COLUMN SUBSET —
         the lazy read the skipping plane rides on. Requested columns
-        absent from the sidecar's schema are silently skipped (legacy
-        r9 sidecars carry (key, entry) only)."""
+        absent from the sidecar's schema are silently skipped (a
+        column with no zone in any file has no ``z:`` columns)."""
         import io
 
         import pyarrow.parquet as pq
@@ -930,20 +924,13 @@ class ParquetMergeTable:
 
     def _full_files(self, man: dict) -> dict:
         """The files section of a FULL record — inline, or decoded
-        from its parquet checkpoint sidecar (columnar r10 layout, or
-        the legacy r9 (key, entry-JSON) layout)."""
+        from its parquet checkpoint sidecar (the columnar layout)."""
         if "files" in man:
             return man["files"]
         import json as _json
 
         t = self._ckpt_table(man)
         names = set(t.schema.names)
-        if "entry" in names:                      # legacy layout
-            return {
-                k: _json.loads(e)
-                for k, e in zip(t.column("key").to_pylist(),
-                                t.column("entry").to_pylist())
-            }
         keys = t.column("key").to_pylist()
         n = len(keys)
         rows_a = t.column("rows").to_pylist()
@@ -1308,9 +1295,8 @@ class ParquetMergeTable:
         aligned python lists with decoded bounds, present only for
         requested columns that carry any zone info. Sources, cheapest
         first: the resolver cache, an inline full record, the
-        checkpoint's COLUMN SUBSET, a legacy (key, entry) checkpoint
-        (full parse — r9-written tables only); then the delta chain
-        replays on top."""
+        checkpoint's COLUMN SUBSET; then the delta chain replays on
+        top."""
         cols = list(cols)
         cached = self._fcache.get(version)
         if cached is not None:
@@ -1404,12 +1390,10 @@ class ParquetMergeTable:
         """The LAZY columnar read: key (+ rows/bytes when asked) + the
         requested columns' four stat arrays + the xjson fallback —
         nothing else leaves the sidecar, and keys/rows stay ARROW
-        until a consumer materializes what it touches. Legacy
-        (key, entry) sidecars fall back to the full parse (they
-        predate the columnar layout)."""
+        until a consumer materializes what it touches."""
         import json as _json
 
-        want = ["key", "entry", "xjson"]
+        want = ["key", "xjson"]
         if with_rows:
             want.append("rows")
         if with_bytes:
@@ -1418,17 +1402,6 @@ class ParquetMergeTable:
             want += [f"z:min:{c}", f"z:max:{c}", f"z:nul:{c}", f"z:an:{c}"]
         t = self._ckpt_table(man, columns=want)
         names = set(t.schema.names)
-        if "entry" in names:                      # legacy layout
-            # decode from the table already in hand — 'key'/'entry'
-            # were in the requested subset, so a second _full_files
-            # fetch would double the GET + parse (r10 review)
-            files = {
-                k: _json.loads(e)
-                for k, e in zip(t.column("key").to_pylist(),
-                                t.column("entry").to_pylist())
-            }
-            return self._arrays_from_dict(
-                files, cols, with_bytes, with_rows)
         keys = t.column("key")
         n = len(keys)
         rows = t.column("rows") if with_rows else None
@@ -3231,15 +3204,6 @@ class ParquetMergeTable:
         if v == 0 or not self._backend.exists(self._bloom_file(v)):
             return {}
         data = _json.loads(self._backend.get(self._bloom_file(v)))
-        if "cols" not in data:   # pre-packed legacy words layout
-            return {
-                col: {
-                    k: {"m": e["m"],
-                        "blob": self._words_to_blob(e["m"], e["words"])}
-                    for k, e in files.items()
-                }
-                for col, files in data.items()
-            }
         bin_ = self._backend.get(self._bloom_bin_file(v))
         return {
             col: {
@@ -3366,8 +3330,7 @@ class ParquetMergeTable:
         deployment shards this per partition. After the build the
         index MAINTAINS ITSELF: every commit carries surviving files'
         bits and indexes its ADDED files incrementally (VERDICT r9
-        next-2 — no full rebuild under churn; ``auto_bloom=False``
-        opts out)."""
+        next-2 — no full rebuild under churn)."""
         lock = self._writer_lock(wait)
         try:
             v = self.current_version()
@@ -3456,8 +3419,7 @@ class ParquetMergeTable:
         added files — the same proportionality as the commit's own
         write. Runs AFTER the manifest create; the incremental job is
         BEST-EFFORT (a failure leaves added files unindexed, which
-        read_point treats as candidates — correct, just less pruned).
-        ``auto_bloom=False`` restores the carry-only r9 behavior. A
+        read_point treats as candidates — correct, just less pruned). A
         column dropped or retyped by schema evolution loses its index
         (its rendering contract no longer holds)."""
         from urllib.parse import unquote
@@ -3485,7 +3447,7 @@ class ParquetMergeTable:
             added = sorted(
                 fileset - {unquote(k) for k in files}
             )
-            if added and getattr(self, "auto_bloom", True):
+            if added:
                 try:
                     surviving.update(
                         self._bloom_build_entries(new_v, col,
@@ -4215,9 +4177,7 @@ class ParquetMergeTable:
         schema and raise a clear error naming the boundary; the
         operator then either vacuums the feed past it
         (``vacuum_change_feed(v+1)``) or replays history through
-        ``changes_at`` per version. Markers without a recorded schema
-        (pre-r11 exports) are skipped — same documented trust as
-        before."""
+        ``changes_at`` per version."""
         import json as _json
         import os as _os
 
@@ -4235,8 +4195,8 @@ class ParquetMergeTable:
                     self._backend.get(self._cdf_marker(ver)))
             except (OSError, ValueError):
                 continue
-            if not rec.get("files") or "schema" not in rec:
-                continue          # vacuumed / unfinalized / pre-r11
+            if not rec.get("files"):
+                continue          # vacuumed / unfinalized
             exported = self._to_nullable(
                 StructType.fromJson(rec["schema"]))
             for f_ in exported.fields:
@@ -4543,9 +4503,7 @@ class ParquetMergeTable:
         file count, everybody knows the right file size): the output
         file count is ceil(total bytes of the rewritten files /
         target_mb), computed from the manifest's per-file ``bytes``
-        (recorded at write time — no filesystem listing). Entries
-        written by a pre-r9 build lack ``bytes`` and fall back to
-        ``target_files``.
+        (recorded at write time — no filesystem listing).
 
         ``zorder_by=(c1, ..., ck)`` makes this OPTIMIZE ZORDER for any
         number of keys: the rewrite range-partitions + sorts on the
@@ -4556,14 +4514,12 @@ class ParquetMergeTable:
         then sets the z-range file count instead of a coalesce
         width."""
         def _n_out(rels, sizes: dict) -> int:
-            if target_mb is None:
+            if target_mb is None or not rels:
                 return max(1, target_files)
-            got = [sizes.get(r) for r in rels]
-            if not got or any(b is None for b in got):
-                return max(1, target_files)  # pre-r9 entries: no bytes
             import math
 
-            return max(1, math.ceil(sum(got) / (target_mb * 1e6)))
+            total = sum(sizes[r] for r in rels)
+            return max(1, math.ceil(total / (target_mb * 1e6)))
 
         def _layout(df: DataFrame, n: int) -> DataFrame:
             if zorder_by is None:
@@ -4669,59 +4625,8 @@ class ParquetMergeTable:
         A delete whose predicate aligns with the clustering (zorder /
         ingestion time / monotone key) therefore runs zero or near-zero
         Spark jobs regardless of table size. Returns the new version."""
-        def body() -> int:
-            from pyspark.sql.types import StructType
-
-            old_v = self.current_version()
-            if old_v == 0:
-                raise ValueError("delete_where on an empty table")
-            # schema comes from the manifest — a metadata-only or
-            # DV delete never constructs a table scan at all
-            schema = self._to_nullable(
-                StructType.fromJson(self._manifest(old_v)["schema"])
-            )
-            residual = self._range_residual(ranges)
-            # NULL never matches a BETWEEN: keep = NOT coalesce(m, F)
-            keep_pred = (
-                F.lit(False) if residual is None
-                else ~F.coalesce(residual, F.lit(False))
-            )
-            # lazy columnar classification (VERDICT r9 next-1): only
-            # the predicate columns' zones are read, never a full
-            # zone-map materialization
-            keys, _, _, za = self._zone_arrays(old_v, list(ranges),
-                                               with_rows=False)
-            keep, cont = self._mask_range(za, len(keys), ranges, True)
-            # no row matches -> carry; fully matching -> drop
-            # (metadata-only); boundary -> rewrite or DV
-            keep_rels = self._keys_where(keys, [not k for k in keep])
-            boundary = self._keys_where(
-                keys, [k and not c for k, c in zip(keep, cont)])
-            out = None
-            new_dv: dict | None = None
-            if boundary and use_deletion_vectors:
-                scan = self._scan(old_v, relkeys=boundary, keep_pos=True)
-                # positions of LIVE matching rows (the DV-aware scan
-                # already excludes previously-deleted positions);
-                # packed per-file on executors, streamed to the
-                # sidecar — driver holds {ref,off,n} only (r11)
-                match = (F.lit(True) if residual is None
-                         else F.coalesce(residual, F.lit(False)))
-                new_dv = self._build_new_dv(scan.filter(match), old_v)
-                keep_rels = keep_rels + boundary  # carry, don't rewrite
-            elif boundary:
-                scan = self._scan(old_v, relkeys=boundary)
-                out = scan.filter(keep_pred)
-            return self._commit_carrying(
-                out, keep_rels, old_v, schema,
-                "delete_where_dv" if new_dv is not None else "delete_where",
-                new_dv=new_dv,
-                rebase=(boundary, ranges, None),
-            )
-
-        v = self._txn(wait, body)
-        self._maybe_auto_compact(wait)
-        return v
+        return self._dml("delete_where", wait, use_deletion_vectors, None,
+                         lambda v: self._select_range(v, ranges, True))
 
     def delete_keys(self, col: str, values, wait: bool = True,
                     use_deletion_vectors: bool = False) -> int:
@@ -4741,49 +4646,9 @@ class ParquetMergeTable:
         CURRENT version (no metadata-only commit for a miss; ADVICE
         r9). Returns the committed version."""
         vals = [x for x in values if x is not None]
-
-        def body() -> int:
-            from pyspark.sql.types import StructType
-
-            old_v = self.current_version()
-            if old_v == 0:
-                raise ValueError("delete_keys on an empty table")
-            self._check_write_mode(old_v)
-            if not vals:
-                return old_v
-            schema = self._to_nullable(
-                StructType.fromJson(self._manifest(old_v)["schema"])
-            )
-            touched = self._point_prune(col, vals, old_v)
-            if not touched:
-                # every probe pruned: nothing to delete — return the
-                # CURRENT version (matching the empty-values no-op)
-                # instead of publishing a metadata-only commit that
-                # churns history/retention for a miss (ADVICE r9)
-                return old_v
-            tset = set(touched)
-            keep_rels = [r for r in self._file_keys(old_v)
-                         if r not in tset]
-            match = F.col(col).isin(vals)
-            out = None
-            new_dv: dict | None = None
-            if use_deletion_vectors:
-                scan = self._scan(old_v, relkeys=touched, keep_pos=True)
-                new_dv = self._build_new_dv(scan.filter(match), old_v)
-                keep_rels = keep_rels + touched
-            else:
-                scan = self._scan(old_v, relkeys=touched)
-                out = scan.filter(~F.coalesce(match, F.lit(False)))
-            return self._commit_carrying(
-                out, keep_rels, old_v, schema,
-                "delete_keys_dv" if new_dv is not None else "delete_keys",
-                new_dv=new_dv,
-                rebase=(touched, None, (col, vals)),
-            )
-
-        v = self._txn(wait, body)
-        self._maybe_auto_compact(wait)
-        return v
+        return self._dml("delete_keys", wait, use_deletion_vectors, None,
+                         lambda v: self._select_keys(v, col, vals),
+                         skip=not vals)
 
     def update_where(self, ranges: dict, assignments: dict,
                      wait: bool = True,
@@ -4805,78 +4670,9 @@ class ParquetMergeTable:
         cannot be assigned (a row may not change partitions — the
         standard lakehouse constraint; use delete + merge for a
         partition move)."""
-        def body() -> int:
-            from pyspark.sql.types import StructType
-
-            old_v = self.current_version()
-            if old_v == 0:
-                raise ValueError("update_where on an empty table")
-            schema = self._to_nullable(
-                StructType.fromJson(self._manifest(old_v)["schema"])
-            )
-            missing = [c for c in assignments if c not in schema.fieldNames()]
-            if missing:
-                raise ValueError(f"UPDATE of unknown column(s): {missing}")
-            assigned_parts = set(assignments) & set(self._parts)
-            if assigned_parts:
-                raise ValueError(
-                    "UPDATE may not assign the partition column(s) "
-                    f"{sorted(assigned_parts)!r} (rows cannot change "
-                    "partitions; delete + merge instead)"
-                )
-            residual = self._range_residual(ranges)
-            match = (
-                F.lit(True) if residual is None
-                else F.coalesce(residual, F.lit(False))
-            )
-
-            def _proj(df):
-                cols = []
-                for f_ in schema.fields:
-                    if f_.name in assignments:
-                        v = assignments[f_.name]
-                        v = v if isinstance(v, Column) else F.lit(v)
-                        cols.append(
-                            F.when(match, v.cast(f_.dataType))
-                            .otherwise(F.col(f_.name))
-                            .cast(f_.dataType).alias(f_.name)
-                        )
-                    else:
-                        cols.append(F.col(f_.name))
-                return df.select(cols)
-
-            # lazy columnar keep/touch split (VERDICT r9 next-1)
-            keys, _, _, za = self._zone_arrays(old_v, list(ranges),
-                                               with_rows=False)
-            keep, _ = self._mask_range(za, len(keys), ranges, False)
-            keep_rels = self._keys_where(keys, [not k for k in keep])
-            touched = self._keys_where(keys, keep)
-            out = None
-            new_dv: dict | None = None
-            if touched and use_deletion_vectors:
-                # merge-on-read UPDATE: carry EVERY file forward,
-                # DV-delete the old versions of matching rows, append
-                # the updated copies as a new file — write cost ∝
-                # matched rows, independent of the size of the files
-                # they live in
-                scan = self._scan(old_v, relkeys=touched, keep_pos=True)
-                matched = scan.filter(match)
-                new_dv = self._build_new_dv(matched, old_v)
-                out = _proj(matched.drop("_file_rel", "_row_pos"))
-                keep_rels = keep_rels + touched
-            elif touched:
-                scan = self._scan(old_v, relkeys=touched)
-                out = _proj(scan)
-            return self._commit_carrying(
-                out, keep_rels, old_v, schema,
-                "update_where_dv" if new_dv is not None else "update_where",
-                new_dv=new_dv,
-                rebase=(touched, ranges, None),
-            )
-
-        v = self._txn(wait, body)
-        self._maybe_auto_compact(wait)
-        return v
+        return self._dml("update_where", wait, use_deletion_vectors,
+                         assignments,
+                         lambda v: self._select_range(v, ranges, False))
 
     def update_keys(self, col: str, values, assignments: dict,
                     wait: bool = True,
@@ -4893,31 +4689,59 @@ class ParquetMergeTable:
         empty list or a fully-pruned probe set is a no-op returning
         the current version (ADVICE r9)."""
         vals = [x for x in values if x is not None]
+        return self._dml("update_keys", wait, use_deletion_vectors,
+                         assignments,
+                         lambda v: self._select_keys(v, col, vals),
+                         skip=not vals)
 
+    def _dml(self, op: str, wait: bool, use_deletion_vectors: bool,
+             assignments: dict | None, select, skip: bool = False) -> int:
+        """The one DELETE/UPDATE transaction behind the four DML
+        methods (Delta's single operation: choose the touched files,
+        rewrite them or write deletion vectors, commit).
+        ``assignments`` None is a DELETE (matching rows are dropped), a
+        dict — even an empty one — an UPDATE (the conditional
+        projection). ``select(old_v)`` returns ``(keep_rels, touched,
+        match, rebase)``: the files carried forward untouched, the
+        files to rewrite or DV, the null-safe row predicate and the
+        rebase read set — or None when pruning proves no file can
+        match. Files in neither list are dropped without a scan (the
+        metadata-only DELETE). ``skip`` (an empty probe list) and a
+        None selection are no-ops returning the CURRENT version: no
+        metadata-only commit for a miss (ADVICE r9)."""
         def body() -> int:
             from pyspark.sql.types import StructType
 
             old_v = self.current_version()
             if old_v == 0:
-                raise ValueError("update_keys on an empty table")
+                raise ValueError(f"{op} on an empty table")
+            # the fence / storage-mode guard runs before the no-ops, so
+            # a sealed table refuses even a DML that would change nothing
             self._check_write_mode(old_v)
-            if not vals:
+            if skip:
                 return old_v
+            # schema comes from the manifest — a metadata-only or
+            # DV delete never constructs a table scan at all
             schema = self._to_nullable(
                 StructType.fromJson(self._manifest(old_v)["schema"])
             )
-            missing = [c for c in assignments
-                       if c not in schema.fieldNames()]
-            if missing:
-                raise ValueError(f"UPDATE of unknown column(s): {missing}")
-            assigned_parts = set(assignments) & set(self._parts)
-            if assigned_parts:
-                raise ValueError(
-                    "UPDATE may not assign the partition column(s) "
-                    f"{sorted(assigned_parts)!r} (rows cannot change "
-                    "partitions; delete + merge instead)"
-                )
-            match = F.coalesce(F.col(col).isin(vals), F.lit(False))
+            if assignments is not None:
+                missing = [c for c in assignments
+                           if c not in schema.fieldNames()]
+                if missing:
+                    raise ValueError(
+                        f"UPDATE of unknown column(s): {missing}")
+                assigned_parts = set(assignments) & set(self._parts)
+                if assigned_parts:
+                    raise ValueError(
+                        "UPDATE may not assign the partition column(s) "
+                        f"{sorted(assigned_parts)!r} (rows cannot change "
+                        "partitions; delete + merge instead)"
+                    )
+            picked = select(old_v)
+            if picked is None:
+                return old_v
+            keep_rels, touched, match, rebase = picked
 
             def _proj(df):
                 cols = []
@@ -4934,34 +4758,72 @@ class ParquetMergeTable:
                         cols.append(F.col(f_.name))
                 return df.select(cols)
 
-            touched = self._point_prune(col, vals, old_v)
-            if not touched:
-                # all probes pruned: no row can match — no-op, current
-                # version (matches the empty-values contract; ADVICE r9)
-                return old_v
-            tset = set(touched)
-            keep_rels = [r for r in self._file_keys(old_v)
-                         if r not in tset]
             out = None
             new_dv: dict | None = None
-            if use_deletion_vectors:
+            if touched and use_deletion_vectors:
+                # merge-on-read: carry every touched file and DV-delete
+                # the LIVE matching positions (the DV-aware scan already
+                # excludes previously-deleted ones; packed per file on
+                # executors, streamed to the sidecar — the driver holds
+                # {ref,off,n} only, r11). An UPDATE appends the updated
+                # copies as a new file: write cost ∝ matched rows,
+                # independent of the size of the files they live in
                 scan = self._scan(old_v, relkeys=touched, keep_pos=True)
                 matched = scan.filter(match)
                 new_dv = self._build_new_dv(matched, old_v)
-                out = _proj(matched.drop("_file_rel", "_row_pos"))
+                if assignments is not None:
+                    out = _proj(matched.drop("_file_rel", "_row_pos"))
                 keep_rels = keep_rels + touched
-            else:
-                out = _proj(self._scan(old_v, relkeys=touched))
+            elif touched:
+                scan = self._scan(old_v, relkeys=touched)
+                out = (scan.filter(~match) if assignments is None
+                       else _proj(scan))
             return self._commit_carrying(
                 out, keep_rels, old_v, schema,
-                "update_keys_dv" if new_dv is not None else "update_keys",
-                new_dv=new_dv,
-                rebase=(touched, None, (col, vals)),
+                op if new_dv is None else f"{op}_dv",
+                new_dv=new_dv, rebase=rebase,
             )
 
         v = self._txn(wait, body)
         self._maybe_auto_compact(wait)
         return v
+
+    def _select_range(self, old_v: int, ranges: dict,
+                      drop_contained: bool) -> tuple:
+        """:meth:`_dml` file selection for a ``ranges`` predicate — the
+        lazy columnar classification (VERDICT r9 next-1): only the
+        predicate columns' zones are read, never a full zone-map
+        materialization. Files the zones prove hold no matching row
+        carry; with ``drop_contained`` (DELETE) files proven
+        ALL-matching are dropped, metadata-only, and only boundary
+        files are touched."""
+        residual = self._range_residual(ranges)
+        # NULL never matches a BETWEEN
+        match = (F.lit(True) if residual is None
+                 else F.coalesce(residual, F.lit(False)))
+        keys, _, _, za = self._zone_arrays(old_v, list(ranges),
+                                           with_rows=False)
+        keep, cont = self._mask_range(za, len(keys), ranges,
+                                      drop_contained)
+        touched = self._keys_where(
+            keys, keep if cont is None
+            else [k and not c for k, c in zip(keep, cont)])
+        return (self._keys_where(keys, [not k for k in keep]), touched,
+                match, (touched, ranges, None))
+
+    def _select_keys(self, old_v: int, col: str, vals: list):
+        """:meth:`_dml` file selection for ``col IN vals`` — the
+        read_point() pruning stack (zone maps, then the Bloom index
+        when one is built for ``col``). None when every probe is
+        pruned."""
+        touched = self._point_prune(col, vals, old_v)
+        if not touched:
+            return None
+        tset = set(touched)
+        keep_rels = [r for r in self._file_keys(old_v) if r not in tset]
+        return (keep_rels, touched,
+                F.coalesce(F.col(col).isin(vals), F.lit(False)),
+                (touched, None, (col, vals)))
 
     # ---- DV maintenance policy (VERDICT r7 next-4) ------------------
     #
@@ -5282,9 +5144,9 @@ class ParquetMergeTable:
             actions.append(f"compact(target_mb={small_file_mb * 8:g})")
         # Bloom-coverage leg (VERDICT r9 next-2): covered-file fraction
         # per indexed column, with a rebuild recommendation when churn
-        # has outpaced maintenance (auto_bloom keeps this at 1.0; a
-        # table written by an older build, or run with auto_bloom off,
-        # decays and shows up here). Metadata-only, zero Spark jobs.
+        # has outpaced maintenance (per-commit indexing keeps this at
+        # 1.0; a failed incremental build leaves its added files
+        # unindexed and shows up here). Metadata-only, zero Spark jobs.
         from urllib.parse import unquote
 
         bloom: dict[str, dict] = {}
